@@ -19,48 +19,41 @@ from pyspark.sql import functions as F
 from .config import DEFAULT_CONFIG, ExtractorConfig
 from .constants import PT, RIL
 from .core.osd import AVAILABLE_LANGUAGES
-from .udf import make_extract_text_udf
+from .schemas import BBOX_SCHEMA, SPAN_COLUMNS, SPAN_SCHEMA, span_transport_name
+from .udf import make_extract_columns_udf, make_extract_text_udf
 
 #: reading-order sort key of the span hierarchy (parents before children:
 #: lower levels carry -1 in child id slots).
 SPAN_ORDER = ("block_id", "para_id", "line_id", "word_id", "symbol_id", "level")
 
 
+def _span_col(leaf):
+    """The transport array of span leaf ``leaf``, named as the span field."""
+    return F.col("r." + span_transport_name(leaf)).alias(leaf.name)
+
+
 def extract_pages(
     pages: DataFrame,
     config: ExtractorConfig | None = None,
     timeout_ms_per_doc: int = 0,
+    region: tuple[int, int, int, int] | None = None,
 ) -> DataFrame:
-    """pages -> docs: adds extracted_text, spans, osd, metrics (Recognize).
+    """pages -> docs: adds extracted_text, spans, osd, metrics (Recognize;
+    ``region`` restricts it to a SetRectangle crop).
 
     Transport: the UDF ships spans as parallel primitive arrays (Arrow loves
     flat arrays; array<struct> through the Python boundary measured ~1.6x
     slower end-to-end) and the nested ``spans`` column is rebuilt JVM-side
     with two codegen'd arrays_zip calls — public schema unchanged.
     """
-    from .udf import make_extract_columns_udf
-
-    udf = make_extract_columns_udf(config, timeout_ms_per_doc)
+    udf = make_extract_columns_udf(config, timeout_ms_per_doc, region)
     keep = [c for c in ("url", "warc_ts", "lang", "bucket") if c in pages.columns]
     cols = pages.select(*keep, udf(F.col("html")).alias("r"))
-    bbox_arr = F.arrays_zip(
-        F.col("r.x0").alias("x0"), F.col("r.y0").alias("y0"),
-        F.col("r.x1").alias("x1"), F.col("r.y1").alias("y1"),
-    )
-    spans = F.arrays_zip(
-        F.col("r.level").alias("level"),
-        F.col("r.block_id").alias("block_id"),
-        F.col("r.para_id").alias("para_id"),
-        F.col("r.line_id").alias("line_id"),
-        F.col("r.word_id").alias("word_id"),
-        F.col("r.symbol_id").alias("symbol_id"),
-        F.col("r.block_type").alias("block_type"),
-        F.col("r.s_text").alias("text"),
-        F.col("r.s_conf").alias("conf"),
-        F.col("r.blanks").alias("blanks"),
-        bbox_arr.alias("bbox"),
-        F.col("r.flags").alias("flags"),
-    )
+    bbox_arr = F.arrays_zip(*[_span_col(leaf) for leaf in BBOX_SCHEMA.fields])
+    spans = F.arrays_zip(*[
+        bbox_arr.alias(f.name) if f.dataType == BBOX_SCHEMA else _span_col(f)
+        for f in SPAN_SCHEMA.fields
+    ])
     return cols.select(
         *keep,
         F.col("r.extracted_text").alias("extracted_text"),
@@ -85,8 +78,8 @@ def extract_spans_long(
     pages: DataFrame,
     config: ExtractorConfig | None = None,
 ) -> DataFrame:
-    """pages -> flat span rows (SPANS_LONG_SCHEMA): the corpus-scale path
-    for span analytics.
+    """pages -> flat span rows (url + schemas.SPAN_COLUMNS): the
+    corpus-scale path for span analytics.
 
     Plan: columnar UDF transport -> ONE flat arrays_zip -> posexplode.
     Measured 1.7x faster than a mapInPandas kernel emitting exploded rows
@@ -94,32 +87,12 @@ def extract_spans_long(
     arrays + codegen'd explode), and 4x faster than exploding the public
     nested ``spans`` column — rebuilding the bbox sub-struct per span just
     to flatten it again dominated that plan's Generate."""
-    from .udf import make_extract_columns_udf
-
     udf = make_extract_columns_udf(config)
     cols = pages.select("url", udf(F.col("html")).alias("r"))
-    z = F.arrays_zip(
-        F.col("r.level").alias("level"),
-        F.col("r.block_id").alias("block_id"),
-        F.col("r.para_id").alias("para_id"),
-        F.col("r.line_id").alias("line_id"),
-        F.col("r.word_id").alias("word_id"),
-        F.col("r.symbol_id").alias("symbol_id"),
-        F.col("r.block_type").alias("block_type"),
-        F.col("r.s_text").alias("text"),
-        F.col("r.s_conf").alias("conf"),
-        F.col("r.blanks").alias("blanks"),
-        F.col("r.x0").alias("x0"), F.col("r.y0").alias("y0"),
-        F.col("r.x1").alias("x1"), F.col("r.y1").alias("y1"),
-        F.col("r.flags").alias("flags"),
-    )
+    z = F.arrays_zip(*[_span_col(leaf) for leaf in SPAN_COLUMNS])
     return (
         cols.select("url", F.posexplode(z).alias("pos", "s"))
-        .select(
-            "url", "s.level", "s.block_id", "s.para_id", "s.line_id",
-            "s.word_id", "s.symbol_id", "s.block_type", "s.text", "s.conf",
-            "s.blanks", "s.x0", "s.y0", "s.x1", "s.y1", "s.flags",
-        )
+        .select("url", *[f"s.{leaf.name}" for leaf in SPAN_COLUMNS])
     )
 
 
@@ -184,34 +157,9 @@ class SparkPageAPI:
         if self._pages is None:
             raise RuntimeError("no pages bound; call set_pages() first")
         if self._docs is None:
-            keep = [c for c in ("url", "warc_ts", "lang") if c in self._pages.columns]
-            docs = extract_pages(self._pages, self.config, timeout_ms_per_doc)
-            if self._region is not None:
-                # region re-extraction: filter word spans by the rectangle in
-                # the *original* geometry is done inside the core; here we
-                # re-run the UDF with the region closed over.
-                from .schemas import EXTRACT_RESULT_SCHEMA
-
-                region = self._region
-                cfg = self.config
-
-                @F.pandas_udf(EXTRACT_RESULT_SCHEMA)
-                def extract_region(html: pd.Series) -> pd.DataFrame:
-                    from .udf import _extractor_for
-
-                    ex = _extractor_for(cfg)
-                    rows = [ex.extract(h, region=region) for h in html]
-                    return pd.DataFrame({
-                        "extracted_text": [d.text for d in rows],
-                        "spans": [d.raw_spans for d in rows],
-                        "osd": [d.osd for d in rows],
-                        "metrics": [d.metrics for d in rows],
-                    })
-
-                docs = self._pages.select(
-                    *keep, extract_region(F.col("html")).alias("res")
-                ).select(*keep, "res.*")
-            self._docs = docs.persist()
+            self._docs = extract_pages(
+                self._pages, self.config, timeout_ms_per_doc, self._region
+            ).persist()
         return self._docs
 
     def analyse_layout(self) -> DataFrame:
@@ -553,7 +501,6 @@ class SparkPageAPI:
         still present (PSM.SINGLE_COLUMN view) — plus the scale factor
         (GetThresholdedImageScaleFactor, :2104-2111)."""
         from .constants import PSM
-        from .udf import make_extract_text_udf
 
         udf = make_extract_text_udf(self.config.with_psm(PSM.SINGLE_COLUMN))
         return self._pages.select(
@@ -624,15 +571,5 @@ def tesseract_rect(
 ) -> DataFrame:
     """TesseractRect (tesserocr/tesserocr.pyx:1670-1712): one-shot fused
     scan + region restriction + extraction -> (url, text)."""
-    from .udf import _extractor_for
-
-    cfg = config or DEFAULT_CONFIG
-    region = (left, top, width, height)
-
-    @F.pandas_udf("string")
-    def rect_text(html: pd.Series) -> pd.Series:
-        ex = _extractor_for(cfg)
-        return pd.Series([ex.extract(h, region=region).text for h in html],
-                         dtype="object")
-
-    return pages.select("url", rect_text(F.col("html")).alias("text"))
+    udf = make_extract_text_udf(config, region=(left, top, width, height))
+    return pages.select("url", udf(F.col("html")).alias("text"))

@@ -66,52 +66,35 @@ METRICS_SCHEMA = T.StructType([
     T.StructField("truncated", T.BooleanType(), False),
 ])
 
-#: full result of the extraction UDF (the PAGE_RES analogue as a column).
-EXTRACT_RESULT_SCHEMA = T.StructType([
-    T.StructField("extracted_text", T.StringType(), True),
-    T.StructField("spans", T.ArrayType(SPAN_SCHEMA), True),
-    T.StructField("osd", OSD_SCHEMA, True),
-    T.StructField("metrics", METRICS_SCHEMA, True),
-])
+#: SPAN_SCHEMA's leaf fields in order, bbox flattened to x0..y1: the one list
+#: of span columns. The UDF's columnar transport, ``api.extract_pages``'
+#: re-zip and ``api.extract_spans_long``'s flat rows all derive from it.
+SPAN_COLUMNS: tuple[T.StructField, ...] = tuple(
+    leaf
+    for f in SPAN_SCHEMA.fields
+    for leaf in (f.dataType.fields if f.dataType == BBOX_SCHEMA else (f,))
+)
+
+
+def span_transport_name(leaf: T.StructField) -> str:
+    """Column of the UDF transport carrying span leaf ``leaf``: integer
+    leaves keep their name; text and conf travel as ``s_text``/``s_conf``."""
+    return leaf.name if leaf.dataType == T.IntegerType() else "s_" + leaf.name
+
 
 #: columnar transport schema of the extraction UDF: spans travel as parallel
-#: primitive arrays (one per span field) and are re-zipped into the nested
-#: array<struct> JVM-side with arrays_zip — ~1.6-1.8x cheaper end-to-end than
-#: shipping array<struct> through Arrow (measured; see api.extract_pages).
+#: primitive arrays (one per SPAN_COLUMNS leaf, integer leaves first) and are
+#: re-zipped into the nested array<struct> JVM-side with arrays_zip —
+#: ~1.6-1.8x cheaper end-to-end than shipping array<struct> through Arrow
+#: (measured; see api.extract_pages).
 EXTRACT_COLUMNS_SCHEMA = T.StructType([
     T.StructField("extracted_text", T.StringType(), True),
     *[
-        T.StructField(n, T.ArrayType(T.IntegerType()), True)
-        for n in ("level", "block_id", "para_id", "line_id", "word_id",
-                  "symbol_id", "block_type", "blanks", "x0", "y0", "x1", "y1",
-                  "flags")
+        T.StructField(span_transport_name(leaf), T.ArrayType(leaf.dataType), True)
+        for leaf in sorted(SPAN_COLUMNS, key=lambda f: f.dataType != T.IntegerType())
     ],
-    T.StructField("s_text", T.ArrayType(T.StringType()), True),
-    T.StructField("s_conf", T.ArrayType(T.DoubleType()), True),
     T.StructField("osd", OSD_SCHEMA, True),
     T.StructField("metrics", METRICS_SCHEMA, True),
-])
-
-#: flat exploded-spans schema — the hot path for corpus-scale span queries:
-#: emitted directly by a mapInPandas kernel as columnar arrays (no nested
-#: structs through Arrow, no per-span dicts anywhere).
-SPANS_LONG_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("level", T.IntegerType(), False),
-    T.StructField("block_id", T.IntegerType(), False),
-    T.StructField("para_id", T.IntegerType(), False),
-    T.StructField("line_id", T.IntegerType(), False),
-    T.StructField("word_id", T.IntegerType(), False),
-    T.StructField("symbol_id", T.IntegerType(), False),
-    T.StructField("block_type", T.IntegerType(), False),
-    T.StructField("text", T.StringType(), True),
-    T.StructField("conf", T.DoubleType(), False),
-    T.StructField("blanks", T.IntegerType(), False),
-    T.StructField("x0", T.IntegerType(), False),
-    T.StructField("y0", T.IntegerType(), False),
-    T.StructField("x1", T.IntegerType(), False),
-    T.StructField("y1", T.IntegerType(), False),
-    T.StructField("flags", T.IntegerType(), False),
 ])
 
 #: per-partition lineage rows for checkpoint/resume (north_rule).

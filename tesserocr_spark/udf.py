@@ -6,18 +6,14 @@ is a per-Python-worker lazy singleton keyed by config, reused across Arrow
 batches. Everything else (projections, aggregations, joins, windows) stays
 JVM-side.
 
-The UDF surface:
+Every extraction UDF in the package comes from one of two factories, both
+taking an optional SetRectangle ``region``:
 
-* ``make_extract_columns_udf`` — the production transport: spans travel as
-  parallel primitive arrays and ``api.extract_pages`` re-zips them JVM-side
-  (measured ~1.6× faster end-to-end than array<struct> through Arrow).
-  The Recognize analogue (tesserocr/tesserocr.pyx:2136-2163).
-* ``make_extract_udf`` — same result as one nested struct column; the
-  simple/reference transport, kept for direct use and tests.
-* ``make_spans_long_kernel`` — mapInPandas kernel emitting flat exploded
-  span rows from Python. Kept for reference: measured 1.7x SLOWER than the
-  columnar transport + JVM posexplode plan that ``api.extract_spans_long``
-  uses (per-span rows through Arrow cost more than per-document arrays).
+* ``make_extract_columns_udf`` — the Recognize analogue
+  (tesserocr/tesserocr.pyx:2136-2163): spans travel as parallel primitive
+  arrays and ``api.extract_pages`` re-zips them JVM-side (measured ~1.6×
+  faster end-to-end than array<struct> through Arrow, and 1.7× faster than
+  shipping exploded per-span rows from a mapInPandas kernel).
 * ``make_extract_text_udf`` — text-only fast path (image_to_text,
   tesserocr/tesserocr.pyx:2683-2732); skips span materialization entirely —
   use it when the query only needs ``extracted_text`` (the layout-only/
@@ -26,7 +22,8 @@ The UDF surface:
 
 A per-batch wall-clock budget mirrors Recognize's ETEXT_DESC deadline
 (tesserocr/tesserocr.pyx:2150-2161): documents starting after the budget is
-exhausted yield NULL results instead of stalling a corpus-scale job.
+exhausted are skipped instead of stalling a corpus-scale job — a skipped
+document has NULL text, osd and metrics and empty span arrays.
 """
 
 from __future__ import annotations
@@ -38,7 +35,8 @@ from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, ExtractorConfig
 from .core.extractor import Extractor
-from .schemas import EXTRACT_RESULT_SCHEMA
+from .schemas import EXTRACT_COLUMNS_SCHEMA, SPAN_COLUMNS
+
 
 def _as_variables_key(config: ExtractorConfig) -> tuple:
     # dataclass with a dict field is unhashable; normalize to a hashable twin
@@ -58,77 +56,42 @@ def _extractor_for(config: ExtractorConfig) -> Extractor:
     return ex
 
 
-def make_extract_udf(
-    config: ExtractorConfig | None = None,
-    timeout_ms_per_doc: int = 0,
-):
-    """Scalar Arrow pandas_udf: html:binary -> EXTRACT_RESULT_SCHEMA struct."""
-    cfg = config or DEFAULT_CONFIG
-
-    @F.pandas_udf(EXTRACT_RESULT_SCHEMA)
-    def extract(html: pd.Series) -> pd.DataFrame:
-        ex = _extractor_for(cfg)
-        n = len(html)
-        deadline = (
-            time.monotonic() + (timeout_ms_per_doc / 1000.0) * n
-            if timeout_ms_per_doc > 0 else None
-        )
-        texts: list[str | None] = []
-        spans: list[list | None] = []
-        osds: list[dict | None] = []
-        metrics: list[dict | None] = []
-        for raw in html:
-            if deadline is not None and time.monotonic() > deadline:
-                texts.append(None)
-                spans.append(None)
-                osds.append(None)
-                metrics.append(None)
-                continue
-            doc = ex.extract(raw)
-            texts.append(doc.text)
-            spans.append(doc.raw_spans)
-            osds.append(doc.osd)
-            metrics.append(doc.metrics)
-        return pd.DataFrame(
-            {"extracted_text": texts, "spans": spans, "osd": osds, "metrics": metrics}
-        )
-
-    return extract
+def _per_doc_with_deadline(html: pd.Series, timeout_ms_per_doc: int, one, skipped) -> list:
+    """``[one(raw) for raw in html]`` under the per-batch budget of
+    ``timeout_ms_per_doc`` × batch size: a document starting after the
+    budget is spent yields ``skipped`` instead (Recognize's ETEXT_DESC
+    deadline, tesserocr/tesserocr.pyx:2150-2161). 0 means no budget."""
+    if timeout_ms_per_doc <= 0:
+        return [one(raw) for raw in html]
+    deadline = time.monotonic() + (timeout_ms_per_doc / 1000.0) * len(html)
+    return [skipped if time.monotonic() > deadline else one(raw) for raw in html]
 
 
-_COL_NAMES = ("extracted_text", "level", "block_id", "para_id", "line_id",
-              "word_id", "symbol_id", "block_type", "blanks", "x0", "y0",
-              "x1", "y1", "flags", "s_text", "s_conf", "osd", "metrics")
+_COL_NAMES = EXTRACT_COLUMNS_SCHEMA.fieldNames()
 
-_EMPTY_COLS = ((),) * 13  # level..flags for a span-less document
+_EMPTY_COLS = ((),) * len(SPAN_COLUMNS)  # span arrays of a span-less document
+
+#: a deadline-skipped document: NULL text/osd/metrics, empty span arrays
+_SKIPPED_ROW = (None, *_EMPTY_COLS, None, None)
 
 
 def make_extract_columns_udf(
     config: ExtractorConfig | None = None,
     timeout_ms_per_doc: int = 0,
+    region: tuple[int, int, int, int] | None = None,
 ):
     """Scalar Arrow pandas_udf: html -> EXTRACT_COLUMNS_SCHEMA (columnar
     span transport — see schemas.EXTRACT_COLUMNS_SCHEMA). Used by
     ``api.extract_pages``, which re-zips the arrays into the public nested
-    ``spans`` column JVM-side."""
-    from .schemas import EXTRACT_COLUMNS_SCHEMA
-
+    ``spans`` column JVM-side. ``region`` is SetRectangle's crop."""
     cfg = config or DEFAULT_CONFIG
 
     @F.pandas_udf(EXTRACT_COLUMNS_SCHEMA)
     def extract_cols(html: pd.Series) -> pd.DataFrame:
         ex = _extractor_for(cfg)
-        n = len(html)
-        deadline = (
-            time.monotonic() + (timeout_ms_per_doc / 1000.0) * n
-            if timeout_ms_per_doc > 0 else None
-        )
-        rows = []
-        for raw in html:
-            if deadline is not None and time.monotonic() > deadline:
-                rows.append((None,) + ((),) * 15 + (None, None))
-                continue
-            d = ex.extract(raw)
+
+        def one(raw) -> tuple:
+            d = ex.extract(raw, region=region)
             if d.raw_spans:
                 (level, bid, pid, lid, wid, sid, bt, text, conf, blanks,
                  bbox, flags) = zip(*d.raw_spans)
@@ -136,77 +99,33 @@ def make_extract_columns_udf(
                 cols = (level, bid, pid, lid, wid, sid, bt, blanks,
                         x0, y0, x1, y1, flags, text, conf)
             else:
-                cols = _EMPTY_COLS + ((), ())
-            rows.append((d.text, *cols, d.osd, d.metrics))
-        return pd.DataFrame(rows, columns=list(_COL_NAMES))
+                cols = _EMPTY_COLS
+            return (d.text, *cols, d.osd, d.metrics)
+
+        rows = _per_doc_with_deadline(html, timeout_ms_per_doc, one, _SKIPPED_ROW)
+        return pd.DataFrame(rows, columns=_COL_NAMES)
 
     return extract_cols
-
-
-def make_spans_long_kernel(
-    config: ExtractorConfig | None = None,
-):
-    """mapInPandas kernel: (url, html, ...) batches -> flat SPANS_LONG rows.
-
-    NOTE: reference implementation only — ``api.extract_spans_long`` ships
-    per-document columnar arrays and explodes JVM-side instead, which
-    measures 1.7x faster end-to-end (row-per-span through Arrow is the
-    expensive part, not the nesting).
-    """
-    cfg = config or DEFAULT_CONFIG
-
-    def kernel(batches):
-        ex = _extractor_for(cfg)
-        for pdf in batches:
-            urls: list[str] = []
-            all_spans: list = []
-            for u, raw in zip(pdf["url"], pdf["html"]):
-                spans = ex.extract(raw).raw_spans
-                all_spans.extend(spans)
-                urls.extend([u] * len(spans))
-            if not all_spans:
-                yield pd.DataFrame(
-                    {c: [] for c in ("url", "level", "block_id", "para_id",
-                                     "line_id", "word_id", "symbol_id",
-                                     "block_type", "text", "conf", "blanks",
-                                     "x0", "y0", "x1", "y1", "flags")}
-                )
-                continue
-            (level, block_id, para_id, line_id, word_id, symbol_id, block_type,
-             text, conf, blanks, bbox, flags) = zip(*all_spans)
-            x0, y0, x1, y1 = zip(*bbox)
-            yield pd.DataFrame({
-                "url": urls, "level": level, "block_id": block_id,
-                "para_id": para_id, "line_id": line_id, "word_id": word_id,
-                "symbol_id": symbol_id, "block_type": block_type, "text": text,
-                "conf": conf, "blanks": blanks,
-                "x0": x0, "y0": y0, "x1": x1, "y1": y1, "flags": flags,
-            })
-
-    return kernel
 
 
 def make_extract_text_udf(
     config: ExtractorConfig | None = None,
     timeout_ms_per_doc: int = 0,
+    region: tuple[int, int, int, int] | None = None,
 ):
-    """Scalar Arrow pandas_udf: html:binary -> extracted_text:string."""
+    """Scalar Arrow pandas_udf: html:binary -> extracted_text:string.
+    ``region`` is SetRectangle's crop."""
     cfg = config or DEFAULT_CONFIG
 
     @F.pandas_udf("string")
     def extract_text(html: pd.Series) -> pd.Series:
         ex = _extractor_for(cfg)
-        n = len(html)
-        deadline = (
-            time.monotonic() + (timeout_ms_per_doc / 1000.0) * n
-            if timeout_ms_per_doc > 0 else None
-        )
-        out: list[str | None] = []
-        for raw in html:
-            if deadline is not None and time.monotonic() > deadline:
-                out.append(None)
-                continue
-            out.append(ex.extract_text(raw))
+        if region is None:
+            one = ex.extract_text
+        else:
+            def one(raw) -> str:
+                return ex.extract(raw, region=region).text
+        out = _per_doc_with_deadline(html, timeout_ms_per_doc, one, None)
         return pd.Series(out, dtype="object")
 
     return extract_text

@@ -334,3 +334,22 @@ def test_substring_dedup_gram_join_is_equi_not_allpairs(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "Window" not in plan
+
+
+def test_extract_spans_long_single_python_stage_single_generate(spark):
+    """The flat span path: one ArrowEvalPython (the columnar UDF) and one
+    Generate (the posexplode of the flat arrays_zip)."""
+    from tesserocr_spark.api import extract_spans_long
+    from tesserocr_spark.pages import synthetic_pages
+
+    plan = _plan(extract_spans_long(synthetic_pages(spark, 10)))
+    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("Generate ") == 1
+
+
+def test_tesseract_rect_single_python_stage(spark):
+    from tesserocr_spark.api import tesseract_rect
+    from tesserocr_spark.pages import synthetic_pages
+
+    plan = _plan(tesseract_rect(synthetic_pages(spark, 10), 0, 0, 40, 1))
+    assert plan.count("ArrowEvalPython") == 1

@@ -246,3 +246,54 @@ class TestAPIFacade:
         assert "Latin" in {r.script_name for r in osd.collect()}
         assert "eng" in api.get_available_languages()
         api.end()
+
+
+REGION = (0, 0, 40, 3)
+
+
+def _heavy_page(i: int) -> bytes:
+    """~150 kB of words: extracting it takes tens of ms, far past a 1 ms/doc
+    budget for a batch of a few documents."""
+    paras = "".join(
+        "<p>" + " ".join(f"w{i}x{p}x{j}" for j in range(40)) + "</p>"
+        for p in range(600)
+    )
+    return f"<html><body>{paras}</body></html>".encode()
+
+
+class TestRecognizeRegion:
+    """SetRectangle -> Recognize goes through the one columnar extraction
+    path (api.extract_pages(region=...))."""
+
+    def test_region_recognize_equals_core(self, spark, pages):
+        ex = Extractor()
+        htmls = {r.url: r.html for r in pages.select("url", "html").limit(40).collect()}
+        sub = pages.filter(F.col("url").isin(list(htmls)))
+        api = SparkPageAPI(spark).set_pages(sub).set_rectangle(*REGION)
+        got = api.recognize().select("url", "extracted_text", "spans").collect()
+        assert len(got) == len(htmls)
+        for r in got:
+            d = ex.extract(htmls[r.url], region=REGION)
+            assert r.extracted_text == d.text, r.url
+            assert [tuple(s) for s in r.spans] == d.raw_spans, r.url
+        api.end()
+
+    def test_region_recognize_applies_deadline(self, spark):
+        """recognize(timeout_ms_per_doc=...) with a rectangle skips the
+        documents that start after the batch budget; the one that ran
+        equals the core, the skipped ones keep empty spans."""
+        from tesserocr_spark.schemas import PAGES_SCHEMA
+
+        rows = [(f"u{i}", None, _heavy_page(i), None, None) for i in range(4)]
+        pages = spark.createDataFrame(rows, PAGES_SCHEMA).coalesce(1)
+        api = SparkPageAPI(spark).set_pages(pages).set_rectangle(*REGION)
+        got = api.recognize(timeout_ms_per_doc=1).collect()
+        ran = [r for r in got if r.extracted_text is not None]
+        skipped = [r for r in got if r.extracted_text is None]
+        assert len(ran) == 1 and len(skipped) == 3
+        d = Extractor().extract(_heavy_page(int(ran[0].url[1:])), region=REGION)
+        assert ran[0].extracted_text == d.text
+        assert [tuple(s) for s in ran[0].spans] == d.raw_spans
+        for r in skipped:
+            assert r.spans == [] and r.osd is None and r.metrics is None
+        api.end()
