@@ -13,7 +13,7 @@ mid-flight) launch ``scripts/scaling_bench.py`` with nothing else
 running.
 
 The watcher then PARSES the run's raw efficiencies (text/full/flat) and
-only promotes the run to ``BENCH/BASELINE_r05_gate.md`` — with a PASS
+only promotes the run to ``BENCH/BASELINE_gate.md`` — with a PASS
 header — when all three clear --gate (0.8, the north rule). A run that
 launched healthy but decayed is logged, kept as best-so-far evidence
 under a clearly-labelled NOT-PASSING header, and the vigil continues.
@@ -39,8 +39,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from scaling_bench import machine_ceiling  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-LOG = os.path.join(REPO, "BENCH", "probe_r06.log")
-GATE_MD = os.path.join(REPO, "BENCH", "BASELINE_r06_gate.md")
+LOG = os.path.join(REPO, "BENCH", "probe.log")
+GATE_MD = os.path.join(REPO, "BENCH", "BASELINE_gate.md")
 LATEST_MD = os.path.join(REPO, "BENCH", "BASELINE_latest.md")
 
 _EFF_RE = re.compile(

@@ -13,7 +13,7 @@ DataFrame query over the exploded spans view, fully Catalyst-planned.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, ExtractorConfig
@@ -218,37 +218,34 @@ class SparkPageAPI:
         """GetIterator (tesserocr/tesserocr.pyx:2367-2377) — the spans_long view."""
         return spans_long(self.recognize())
 
-    def all_words(self) -> DataFrame:
-        """(url, pos, word) in reading order (AllWords, tesserocr.pyx:2528-2544)."""
+    def _word_stream(self) -> tuple[DataFrame, Column]:
+        """WORD spans that carry text, plus their reading-order position
+        (0-based per url) — the one word stream of AllWords and its
+        confidence twins (tesserocr/tesserocr.pyx:2503-2559)."""
         sl = self.get_iterator().filter(
             (F.col("level") == RIL.WORD) & F.col("text").isNotNull()
         )
-        w = F.row_number().over(
-            _url_window().orderBy("block_id", "para_id", "line_id", "word_id")
+        pos = F.row_number().over(
+            Window.partitionBy("url").orderBy("block_id", "para_id", "line_id", "word_id")
         ) - 1
-        return sl.select("url", w.alias("pos"), F.col("text").alias("word"))
+        return sl, pos.alias("pos")
+
+    def all_words(self) -> DataFrame:
+        """(url, pos, word) in reading order (AllWords, tesserocr.pyx:2528-2544)."""
+        sl, pos = self._word_stream()
+        return sl.select("url", pos, F.col("text").alias("word"))
 
     def all_word_confidences(self) -> DataFrame:
         """(url, pos, conf:int) — int truncation preserved
         (AllWordConfidences, tesserocr/tesserocr.pyx:2503-2526)."""
-        sl = self.get_iterator().filter(
-            (F.col("level") == RIL.WORD) & F.col("text").isNotNull()
-        )
-        w = F.row_number().over(
-            _url_window().orderBy("block_id", "para_id", "line_id", "word_id")
-        ) - 1
-        return sl.select("url", w.alias("pos"), F.col("conf").cast("int").alias("conf"))
+        sl, pos = self._word_stream()
+        return sl.select("url", pos, F.col("conf").cast("int").alias("conf"))
 
     def map_word_confidences(self) -> DataFrame:
         """(url, pos, word, conf) — positional zip
         (MapWordConfidences, tesserocr/tesserocr.pyx:2546-2559)."""
-        sl = self.get_iterator().filter(
-            (F.col("level") == RIL.WORD) & F.col("text").isNotNull()
-        )
-        w = F.row_number().over(
-            _url_window().orderBy("block_id", "para_id", "line_id", "word_id")
-        ) - 1
-        return sl.select("url", w.alias("pos"), F.col("text").alias("word"),
+        sl, pos = self._word_stream()
+        return sl.select("url", pos, F.col("text").alias("word"),
                          F.col("conf").cast("int").alias("conf"))
 
     def mean_text_conf(self) -> DataFrame:
@@ -553,12 +550,6 @@ class SparkPageAPI:
 
     def get_init_languages_as_string(self) -> str:
         return self.config.lang
-
-
-def _url_window():
-    from pyspark.sql import Window
-
-    return Window.partitionBy("url")
 
 
 def tesseract_rect(

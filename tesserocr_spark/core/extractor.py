@@ -22,6 +22,9 @@ Frozen output laws (shared with fold.py, FIXTURES.md §2):
   that is reproducible in ANSI SQL for the DuckDB oracle); higher levels
   average their words; ``MeanTextConf`` truncates to int
   (tesserocr/tesserocr.pyx:2499-2501);
+* character data between tags concatenates; only ASCII whitespace and
+  ``<br>`` separate words — a tag never does, styled or not
+  (``segment.split_lines``);
 * word separators are exactly the five chars of the Java-regex ∩ RE2
   ``\\s`` intersection — space ``\\t \\n \\r \\f`` (segment.py
   ``_ASCII_WS``); ``\\v`` (RE2 ``\\s`` excludes it) and Unicode spaces
@@ -171,6 +174,7 @@ class Extractor:
         self._max_html_bytes = c.get_int_variable("max_html_bytes")
         self._blacklist = set(c.get_variable("tessedit_char_blacklist"))
         self._whitelist = set(c.get_variable("tessedit_char_whitelist"))
+        self._min_text_chars = c.get_int_variable("min_text_chars")
 
     # -- public API -----------------------------------------------------------
 
@@ -186,11 +190,7 @@ class Extractor:
         tesserocr/tesserocr.pyx:1835-1847).
         """
         psm = self.config.psm
-        text_in, truncated, html_bytes = self._decode(html)
-        paragraphs = parse_paragraphs(text_in) if text_in else []
-        blocks = group_blocks(paragraphs, self._max_link_density)
-        blocks = self._apply_psm(blocks, psm)
-
+        blocks, truncated, html_bytes = self._layout(html)
         if psm == PSM.OSD_ONLY:
             osd = detect_os(_all_text(blocks), self.config.lang)
             return ExtractedDoc("", [], osd, self._metrics(html_bytes, [], truncated))
@@ -204,24 +204,15 @@ class Extractor:
         """Text-only fast path (the ``image_to_text`` one-shot helper,
         tesserocr/tesserocr.pyx:2683-2732): identical output to
         ``extract(...).text`` but skips span materialization entirely."""
-        psm = self.config.psm
-        if psm == PSM.OSD_ONLY:
-            return ""
-        text_in, _truncated, _n = self._decode(html)
-        paragraphs = parse_paragraphs(text_in) if text_in else []
-        blocks = group_blocks(paragraphs, self._max_link_density)
-        blocks = self._apply_psm(blocks, psm)
-        blocks = self._resolve(blocks)
-        if psm == PSM.AUTO_ONLY:
+        if self.config.psm in (PSM.OSD_ONLY, PSM.AUTO_ONLY):
             return ""
         para_renders: list[str] = []
-        for blk in blocks:
+        for blk in self._filter_words(self._layout(html)[0]):
             if blk.is_image:
                 continue
             for para in blk.paras:
-                lines = [" ".join([t[0] for t in line]) for line in para if line]
-                if lines:
-                    para_renders.append("\n".join(lines) + "\n")
+                para_renders.append(
+                    "\n".join([" ".join([t[0] for t in line]) for line in para]) + "\n")
         return "\n".join(para_renders)
 
     # -- internals --------------------------------------------------------------
@@ -238,6 +229,14 @@ class Extractor:
         if truncated:
             raw = raw[: self._max_html_bytes]
         return raw.decode("utf-8", "replace"), truncated, n
+
+    def _layout(self, html: bytes | str | None) -> tuple[list[Block], bool, int]:
+        """decode -> parse -> group -> PSM: the prefix both public paths share.
+        Returns (blocks, truncated, html_bytes)."""
+        text_in, truncated, html_bytes = self._decode(html)
+        paragraphs = parse_paragraphs(text_in) if text_in else []
+        blocks = group_blocks(paragraphs, self._max_link_density)
+        return self._apply_psm(blocks, self.config.psm), truncated, html_bytes
 
     def _apply_psm(self, blocks: list[Block], psm: int) -> list[Block]:
         if psm in (PSM.AUTO, PSM.AUTO_OSD, PSM.AUTO_ONLY):
@@ -299,69 +298,67 @@ class Extractor:
             flags.append(f)
         return "".join(chars), tuple(flags)
 
-    def _resolve(self, blocks: list[Block]) -> list[Block]:
-        """Apply char blacklist/whitelist + min-length filtering to words.
+    def _filter_words(
+        self,
+        blocks: list[Block],
+        region: tuple[int, int, int, int] | None = None,
+    ) -> list[Block]:
+        """One pass over the words: char blacklist/whitelist + min-length
+        filtering, then (with ``region``) the SetRectangle crop.
 
         Words emptied by filtering are dropped silently (the AllWords
-        contract, tesserocr/tesserocr.pyx:2537-2542); lines/paras/blocks
-        emptied by that are dropped too.
+        contract, tesserocr/tesserocr.pyx:2537-2542). ``region=(left, top,
+        width, height)`` keeps only words whose char-grid box — in the
+        filtered but uncropped geometry — falls inside the rectangle
+        (tesserocr/tesserocr.pyx:1835-1847); image blocks consume one grid
+        row and are cropped away. Lines, paras and blocks left empty are
+        dropped; ids and geometry of the survivors are recomputed by the
+        emission pass, exactly as the reference re-recognizes within the
+        rectangle.
         """
-        min_chars = self.config.get_int_variable("min_text_chars")
-        if not self._blacklist and not self._whitelist and min_chars <= 1:
+        min_chars = self._min_text_chars
+        chars = bool(self._blacklist or self._whitelist or min_chars > 1)
+        if not chars and region is None:
             return blocks
-        out: list[Block] = []
-        for blk in blocks:
-            if blk.is_image:
-                out.append(blk)
-                continue
-            nb = Block(blk.block_type, blk.boiler, False)
-            for para in blk.paras:
-                np_ = []
-                for line in para:
-                    nl = []
-                    for w, fl, cfl in line:
-                        w2, cfl2 = self._filter_word_chars(w, cfl)
-                        if w2 and len(w2) >= min_chars:
-                            nl.append((w2, fl, cfl2))
-                    if nl:
-                        np_.append(nl)
-                if np_:
-                    nb.paras.append(np_)
-            if nb.paras:
-                out.append(nb)
-        return out
-
-    def _rect_filter(
-        self, blocks: list[Block], region: tuple[int, int, int, int]
-    ) -> list[Block]:
-        """SetRectangle analogue (tesserocr/tesserocr.pyx:1835-1847): keep only
-        words whose char-grid box (in the *unrestricted* document geometry)
-        falls inside ``region=(left, top, width, height)``; ids and geometry of
-        the surviving spans are then recomputed by the normal emission pass,
-        exactly as the reference re-recognizes within the rectangle."""
-        left, top, width, height = region
-        rx0, ry0, rx1, ry1 = left, top, left + width, top + height
+        if region is not None:
+            rx0, ry0 = region[0], region[1]
+            rx1, ry1 = rx0 + region[2], ry0 + region[3]
         out: list[Block] = []
         y = 0
         for blk in blocks:
             if blk.is_image:
-                y += 1  # image block consumes one grid row; excluded from rect output
+                if region is None:
+                    out.append(blk)
+                else:
+                    y += 1
                 continue
             nb = Block(blk.block_type, blk.boiler, False)
             for para in blk.paras:
                 np_ = []
                 for line in para:
-                    col = 0
-                    nl = []
-                    for i, (w, _fl, _cfl) in enumerate(line):
-                        col += 0 if i == 0 else 1
-                        x0, x1 = col, col + len(w)
-                        col = x1
-                        if x0 >= rx0 and y >= ry0 and x1 <= rx1 and y + 1 <= ry1:
-                            nl.append(line[i])
-                    y += 1
-                    if nl:
-                        np_.append(nl)
+                    if chars:
+                        kept = []
+                        for w, fl, cfl in line:
+                            w, cfl = self._filter_word_chars(w, cfl)
+                            if w and len(w) >= min_chars:
+                                kept.append((w, fl, cfl))
+                        line = kept
+                        if not line:
+                            continue
+                    if region is not None:
+                        kept = []
+                        if ry0 <= y < ry1:
+                            col = 0
+                            for i, item in enumerate(line):
+                                x0 = col + (i > 0)
+                                col = x0 + len(item[0])
+                                if x0 >= rx0 and col <= rx1:
+                                    kept.append(item)
+                        line = kept
+                        y += 1
+                        if not line:
+                            continue
+                    np_.append(line)
                 if np_:
                     nb.paras.append(np_)
             if nb.paras:
@@ -376,13 +373,11 @@ class Extractor:
     ) -> tuple[list[tuple], str]:
         """Assign reading-order ids + char-grid geometry; build spans & text.
 
-        Post-_resolve invariant: every text block has >=1 para, every para
-        >=1 line, every line >=1 word — so within-parent ids are direct
+        Post-_filter_words invariant: every text block has >=1 para, every
+        para >=1 line, every line >=1 word — so within-parent ids are direct
         enumeration indices (content-derived, partition-independent).
         """
-        blocks = self._resolve(blocks)
-        if region is not None:
-            blocks = self._rect_filter(blocks, region)
+        blocks = self._filter_words(blocks, region)
         # spans are PLAIN 12-tuples in Span field order (see ExtractedDoc):
         # NamedTuple construction dominated the profile at corpus scale
         spans: list[tuple] = []

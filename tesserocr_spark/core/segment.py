@@ -44,7 +44,6 @@ _VOID_TAGS = frozenset("br img hr meta link input area base col embed source tra
 #: codepoints are all word characters, not separators (r04 edge-oracle
 #: finding, tests/test_edge_oracles.py rows 9012/9015).
 _ASCII_WS = " \t\n\r\f"
-_WS_SET = frozenset(_ASCII_WS)
 _WS_SPLIT_RE = re.compile(r"[ \t\n\r\f]+")
 _NONWS_RE = re.compile(r"[^ \t\n\r\f]")
 
@@ -56,22 +55,11 @@ _BR_STYLE = -1
 #: open-tag stack in handle_data)
 _SKIP_TAGS = frozenset(("script", "style", "noscript", "template", "title", "head"))
 
-#: shared all-zero char-flag tuples keyed by word length (allocation saver)
-_ZERO_CACHE: dict[int, tuple] = {}
-
 #: unstyled word -> ((word, 0, zeros), sentence_end) — pure function of the
 #: word, so caching preserves byte identity; bounded against adversarial
 #: vocabularies (cleared wholesale, keeping amortized O(1))
 _WORD_CACHE: dict[str, tuple] = {}
 _WORD_CACHE_MAX = 1 << 17
-
-
-def _zeros(n: int) -> tuple:
-    t = _ZERO_CACHE.get(n)
-    if t is None:
-        t = (0,) * n
-        _ZERO_CACHE[n] = t
-    return t
 
 
 class Fragment:
@@ -276,88 +264,62 @@ def parse_paragraphs_stdlib(html_text: str) -> list[RawParagraph]:
 
 def split_lines(para: RawParagraph) -> list[list[tuple[str, int, tuple]]]:
     """Split a paragraph into lines of (word, flags, char_flags) — the
-    TEXTLINE/WORD law. ``char_flags`` keeps per-character sup/sub bits for
+    TEXTLINE/WORD law. ``char_flags`` keeps per-character style bits for
     SYMBOL-level spans (per-symbol attributes, tesserocr/tesserocr.pyx:1018-1040).
 
-    Frozen whitespace law (byte-identity gate, FIXTURES.md §2):
+    Frozen word law (byte-identity gate, FIXTURES.md §2):
 
-    1. entity-decoded character data, whitespace runs normalized to one space;
+    1. character data between tags concatenates; only ASCII whitespace
+       (``_ASCII_WS``) and ``<br>`` separate words — a tag never does;
     2. explicit ``<br>`` breaks a line;
-    3. a line also breaks after sentence-terminal punctuation
-       (``. ! ? …``) followed by whitespace;
-    4. words are the space-separated tokens of each line.
-
-    flags bitfield: 1=superscript, 2=subscript (from <sup>/<sub>,
-    reference symbol attributes tesserocr/tesserocr.pyx:1018-1040).
+    3. a line also breaks after a word of two or more chars ending in
+       sentence-terminal punctuation (``. ! ? …``);
+    4. a word's flags are the AND-fold of its chars' style bits
+       (1=sup, 2=sub, 64=bold, 128=italic, 256=monospace).
     """
-    # fast path: no <br>, every fragment unstyled (the overwhelmingly common
-    # case for web text) — pure regex split, no per-char bookkeeping; the
-    # per-word (word, 0, zeros) tuple and its sentence-end flag are cached
-    # (web text is Zipf-distributed, so the hit rate is high)
-    if all(f.style == 0 for f in para.frags):
-        lines: list[list[tuple[str, int, tuple]]] = []
+    styled = any(f.style for f in para.frags)  # a <br> (_BR_STYLE) counts
+    segments: list[list[Fragment]] = [para.frags]
+    if styled:
+        segments = [[]]
+        for f in para.frags:
+            if f.style == _BR_STYLE:
+                segments.append([])
+            else:
+                segments[-1].append(f)
+
+    # the per-word (word, 0, zero char flags) tuple and its sentence-end
+    # flag are cached (web text is Zipf-distributed, so the hit rate is high)
+    cache = _WORD_CACHE
+    lines: list[list[tuple[str, int, tuple]]] = []
+    for seg in segments:
+        text = "".join([f.text for f in seg])
+        char_style: list[int] | None = None
+        if styled and any(f.style for f in seg):
+            char_style = []
+            for f in seg:
+                char_style += [f.style] * len(f.text)
+        pos = 0
         cur: list[tuple[str, int, tuple]] = []
-        cache = _WORD_CACHE
-        for w in _WS_SPLIT_RE.split(" ".join([f.text for f in para.frags])):
+        for w in _WS_SPLIT_RE.split(text):
             if not w:  # re.split keeps boundary empties str.split() drops
                 continue
             ent = cache.get(w)
             if ent is None:
                 if len(cache) >= _WORD_CACHE_MAX:
                     cache.clear()
-                ent = ((w, 0, _zeros(len(w))), w[-1] in ".!?…" and len(w) > 1)
+                ent = ((w, 0, (0,) * len(w)), w[-1] in ".!?…" and len(w) > 1)
                 cache[w] = ent
-            cur.append(ent[0])
-            if ent[1]:
-                lines.append(cur)
-                cur = []
-        if cur:
-            lines.append(cur)
-        return lines
-
-    # build one string per <br>-separated segment, tracking per-char flags
-    segments: list[list[tuple[str, int]]] = [[]]  # list of (char, style)
-    for f in para.frags:
-        if f.style == _BR_STYLE:
-            segments.append([])
-            continue
-        fl = f.style
-        for ch in f.text:
-            segments[-1].append((ch, fl))
-
-    lines: list[list[tuple[str, int, tuple]]] = []
-    for seg in segments:
-        if not seg:
-            continue
-        # rebuild words by walking original chars and collapsing whitespace;
-        # a word is sup/sub only if EVERY one of its chars is (AND-fold)
-        words: list[tuple[str, int, tuple]] = []
-        buf: list[str] = []
-        buf_char_flags: list[int] = []
-        for ch, fl in seg:
-            if ch in _WS_SET:
-                if buf:
-                    wf = buf_char_flags[0]
-                    for f in buf_char_flags:
-                        wf &= f
-                    words.append(("".join(buf), wf, tuple(buf_char_flags)))
-                    buf, buf_char_flags = [], []
-            else:
-                buf.append(ch)
-                buf_char_flags.append(fl)
-        if buf:
-            wf = buf_char_flags[0]
-            for f in buf_char_flags:
-                wf &= f
-            words.append(("".join(buf), wf, tuple(buf_char_flags)))
-        if not words:
-            continue
-        # sentence-boundary line breaks over the word sequence
-        cur: list[tuple[str, int, tuple]] = []
-        for item in words:
+            item = ent[0]
+            if char_style is not None:
+                start = text.index(w, pos)
+                pos = start + len(w)
+                cfl = tuple(char_style[start:pos])
+                wf = cfl[0]
+                for fl in cfl:
+                    wf &= fl
+                item = (w, wf, cfl)
             cur.append(item)
-            w = item[0]
-            if w and w[-1] in ".!?…" and len(w) > 1:
+            if ent[1]:
                 lines.append(cur)
                 cur = []
         if cur:

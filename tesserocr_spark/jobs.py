@@ -4,9 +4,9 @@ This is the ProcessPages ETL driver (tesserocr/tesserocr.pyx:2253-2315)
 rebuilt for a 10^12-row table (north_rule):
 
 * **bucketing** — ``bucket = pmod(xxhash64(url), n_buckets)`` stands in for
-  Iceberg ``bucket(N, url)`` partitioning (the Iceberg runtime jar is not in
-  this sandbox; the writer is gated behind an import-try). Work, lineage and
-  resume are all keyed by this content-derived bucket.
+  Iceberg ``bucket(N, url)`` partitioning. There is no Iceberg writer: the
+  output is bucket-partitioned parquet (``write_bucketed``). Work, lineage
+  and resume are all keyed by this content-derived bucket.
 * **salted repartition** — web corpora are host-skewed (one host can fill a
   partition); hashing the full url (not the host) plus an optional salt of
   the byte size spreads giant hosts and giant documents.
@@ -48,15 +48,6 @@ def salted_repartition(
         F.xxhash64("url", F.coalesce(F.length("html"), F.lit(0))), F.lit(salt)
     )
     return pages.repartition(n_partitions, F.xxhash64("url"), salt_col)
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True if the Iceberg Spark runtime is on the classpath."""
-    try:
-        spark._jvm.org.apache.iceberg.Schema  # noqa: SLF001
-        return True
-    except Exception:  # noqa: BLE001
-        return False
 
 
 def write_bucketed(df: DataFrame, path: str, n_buckets: int = DEFAULT_BUCKETS) -> None:

@@ -636,7 +636,7 @@ def _lzw_decode(
     the output exceeds it — LZW expands up to ~750x, so an unbounded
     decode of a crafted multi-MB stream could build GB-scale buffers
     before the caller's length check rejects them."""
-    if not 2 <= min_code_size <= 11:  # GIF89a legal range (width caps at 12)
+    if not 2 <= min_code_size <= 8:  # GIF89a legal range: pixels are bytes
         return None
     clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
     literals = _lzw_literals(min_code_size)

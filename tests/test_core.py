@@ -259,6 +259,68 @@ class TestRegion:
         blocks = [s for s in d.spans if s.level == RIL.BLOCK]
         assert blocks and blocks[0].block_id == 0
 
+    def test_char_filters_then_region(self):
+        # filtering runs first and shifts the grid: with "()" blacklisted and
+        # words under 3 chars dropped, row 1 reads "The quick brown fox ..."
+        # (brown at cols 10-15) and row 4 "with break entity…" (break at
+        # 5-10); the crop x in [4, 16], rows 1-4, then keeps these words,
+        # re-laid out from row 0 / col 0
+        ex = Extractor(ExtractorConfig(variables={
+            "tessedit_char_blacklist": "()", "min_text_chars": "3"}))
+        d = ex.extract(CANONICAL_HTML, region=(4, 1, 12, 4))
+        assert d.text == "quick brown\nruns away\n\nparagraph\nbreak\n"
+        assert [(s.text, s.bbox) for s in d.spans if s.level == RIL.WORD] == [
+            ("quick", (0, 0, 5, 1)), ("brown", (6, 0, 11, 1)),
+            ("runs", (0, 1, 4, 2)), ("away", (5, 1, 9, 2)),
+            ("paragraph", (0, 2, 9, 3)), ("break", (0, 3, 5, 4)),
+        ]
+        assert fold_spans(d.spans) == d.text
+
+
+class TestWordLaw:
+    """Character data between tags concatenates; only ASCII whitespace and
+    <br> separate words — whether or not any fragment is styled."""
+
+    @staticmethod
+    def _words(d):
+        return [s.text for s in d.spans if s.level == RIL.WORD]
+
+    def test_bare_lt_is_word_data(self):
+        ex = Extractor()
+        assert ex.extract_text(b"<p>x<5 y</p>") == "x<5 y\n"
+        assert self._words(ex.extract(b"<p>x<5 y</p>")) == ["x<5", "y"]
+
+    @pytest.mark.parametrize("html", [
+        b"<p>foo<span>bar</span> baz</p>",
+        b"<p>foo<span>bar</span> <i>baz</i></p>",
+    ])
+    def test_styling_elsewhere_never_moves_word_breaks(self, html):
+        ex = Extractor()
+        d = ex.extract(html)
+        assert ex.extract_text(html) == d.text == "foobar baz\n"
+        assert self._words(d) == ["foobar", "baz"]
+
+    def test_style_flags_follow_word_offsets(self):
+        # a repeated word takes the style of its own occurrence
+        d = Extractor().extract(b"<p>ab <i>ab</i> ab H<sub>2</sub>O</p>")
+        words = [(s.text, s.flags) for s in d.spans if s.level == RIL.WORD]
+        assert words == [("ab", 0), ("ab", 128), ("ab", 0), ("H2O", 0)]
+        syms = [(s.text, s.flags) for s in d.spans
+                if s.level == RIL.SYMBOL and s.word_id == 3]
+        assert syms == [("H", 0), ("2", FLAG_SUBSCRIPT), ("O", 0)]
+
+    @pytest.mark.parametrize("html", [
+        b"<p>one two<br>three. four</p>",
+        b"<p>one <b>two</b><br>three. <i>four</i></p>",
+        b"<p>one two<br><b>three.</b> four</p>",
+    ])
+    def test_br_and_sentence_breaks(self, html):
+        ex = Extractor()
+        d = ex.extract(html)
+        assert ex.extract_text(html) == d.text == "one two\nthree.\nfour\n"
+        assert [s.text for s in d.spans if s.level == RIL.TEXTLINE] == [
+            "one two", "three.", "four"]
+
 
 class TestConfigLifecycle:
     def test_blacklist(self):
