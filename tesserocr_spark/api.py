@@ -20,7 +20,7 @@ from .config import DEFAULT_CONFIG, ExtractorConfig
 from .constants import PT, RIL
 from .core.osd import AVAILABLE_LANGUAGES
 from .schemas import BBOX_SCHEMA, SPAN_COLUMNS, SPAN_SCHEMA, span_transport_name
-from .udf import make_extract_columns_udf, make_extract_text_udf
+from .udf import _gc_paused, make_extract_columns_udf, make_extract_text_udf
 
 #: reading-order sort key of the span hierarchy (parents before children:
 #: lower levels carry -1 in child id slots).
@@ -198,11 +198,12 @@ class SparkPageAPI:
 
         @F.pandas_udf("string")
         def refold(spans: pd.Series) -> pd.Series:
-            return pd.Series(
-                [fold_spans([] if sp is None else list(sp), line_sep, para_sep)
-                 for sp in spans],
-                dtype="object",
-            )
+            with _gc_paused():
+                return pd.Series(
+                    [fold_spans([] if sp is None else list(sp), line_sep, para_sep)
+                     for sp in spans],
+                    dtype="object",
+                )
 
         return docs.select("url", refold("spans").alias("text"))
 

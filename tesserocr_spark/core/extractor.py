@@ -96,6 +96,10 @@ def _word_attrs(word: str) -> tuple:
     return ent
 
 
+#: (blocks, paras, lines, words, symbols, boilerplate blocks) of a span-less doc
+_NO_COUNTS = (0, 0, 0, 0, 0, 0)
+
+
 class Span(NamedTuple):
     """One span of the hierarchy. A NamedTuple (not a dict) so the Arrow
     conversion in the vectorized UDF maps fields positionally — measurably
@@ -193,12 +197,12 @@ class Extractor:
         blocks, truncated, html_bytes = self._layout(html)
         if psm == PSM.OSD_ONLY:
             osd = detect_os(_all_text(blocks), self.config.lang)
-            return ExtractedDoc("", [], osd, self._metrics(html_bytes, [], truncated))
+            return ExtractedDoc("", [], osd, self._metrics(html_bytes, _NO_COUNTS, truncated))
 
         layout_only = psm == PSM.AUTO_ONLY
-        spans, doc_text = self._emit(blocks, layout_only, region)
+        spans, doc_text, counts = self._emit(blocks, layout_only, region)
         osd = detect_os(doc_text if not layout_only else _all_text(blocks), self.config.lang)
-        return ExtractedDoc(doc_text, spans, osd, self._metrics(html_bytes, spans, truncated))
+        return ExtractedDoc(doc_text, spans, osd, self._metrics(html_bytes, counts, truncated))
 
     def extract_text(self, html: bytes | str | None) -> str:
         """Text-only fast path (the ``image_to_text`` one-shot helper,
@@ -370,8 +374,12 @@ class Extractor:
         blocks: list[Block],
         layout_only: bool,
         region: tuple[int, int, int, int] | None,
-    ) -> tuple[list[tuple], str]:
+    ) -> tuple[list[tuple], str, tuple]:
         """Assign reading-order ids + char-grid geometry; build spans & text.
+
+        Returns (spans, text, counts): ``counts`` is (blocks, paras, lines,
+        words, symbols, boilerplate blocks), tallied per block and para while
+        emitting so the metrics never re-walk the spans.
 
         Post-_filter_words invariant: every text block has >=1 para, every
         para >=1 line, every line >=1 word — so within-parent ids are direct
@@ -385,6 +393,7 @@ class Extractor:
         para_renders: list[str] = []
         y = 0
         block_id = -1
+        n_paras = n_lines = n_words = n_boiler = 0
         emit_syms = self._emit_symbols and not layout_only
         word_attrs = _word_attrs
         RWORD, RSYM, RLINE, RPARA, RBLOCK = (
@@ -401,11 +410,17 @@ class Extractor:
                 append((RPARA, block_id, 0, -1, -1, -1, bt, None, 0.0, 0, bb, 0))
                 append((RLINE, block_id, 0, 0, -1, -1, bt, None, 0.0, 0, bb, 0))
                 append((RWORD, block_id, 0, 0, 0, -1, bt, None, 0.0, 0, bb, 0))
+                n_paras += 1
+                n_lines += 1
+                n_words += 1
                 y += 1
                 continue
 
             block_id += 1
             boiler_flag = FLAG_BOILERPLATE if blk.boiler else 0
+            if boiler_flag:
+                n_boiler += 1
+            n_paras += len(blk.paras)
             block_conf_sum = 0.0
             block_nw = 0
             block_y0 = y
@@ -463,6 +478,7 @@ class Extractor:
                     if len(ltext) > px1:
                         px1 = len(ltext)
                     y += 1
+                n_lines += len(para)
                 ptext = "\n".join(para_lines)
                 spans[ppos] = (
                     RPARA, block_id, para_id, -1, -1, -1, bt,
@@ -479,26 +495,24 @@ class Extractor:
                 None if layout_only else "".join(block_parts),
                 block_conf_sum / block_nw, 0,
                 (0, block_y0, block_x1, y), boiler_flag)
+            n_words += block_nw
 
         doc_text = "" if layout_only else "\n".join(para_renders)
-        return spans, doc_text
+        n_blocks = block_id + 1
+        # every span not counted above is a SYMBOL
+        n_symbols = len(spans) - n_blocks - n_paras - n_lines - n_words
+        return spans, doc_text, (n_blocks, n_paras, n_lines, n_words, n_symbols, n_boiler)
 
-    def _metrics(self, html_bytes: int, spans: list[tuple], truncated: bool) -> dict:
-        n = {RIL.BLOCK: 0, RIL.PARA: 0, RIL.TEXTLINE: 0, RIL.WORD: 0, RIL.SYMBOL: 0}
-        boiler = 0
-        for s in spans:  # raw positional spans: s[0]=level, s[11]=flags
-            lvl = s[0]
-            n[lvl] += 1
-            if lvl == RIL.BLOCK and s[11] & FLAG_BOILERPLATE:
-                boiler += 1
+    def _metrics(self, html_bytes: int, counts: tuple, truncated: bool) -> dict:
+        n_blocks, n_paras, n_lines, n_words, n_symbols, n_boiler = counts
         return {
             "html_bytes": html_bytes,
-            "n_blocks": n[RIL.BLOCK],
-            "n_paras": n[RIL.PARA],
-            "n_lines": n[RIL.TEXTLINE],
-            "n_words": n[RIL.WORD],
-            "n_symbols": n[RIL.SYMBOL],
-            "n_boiler_blocks": boiler,
+            "n_blocks": n_blocks,
+            "n_paras": n_paras,
+            "n_lines": n_lines,
+            "n_words": n_words,
+            "n_symbols": n_symbols,
+            "n_boiler_blocks": n_boiler,
             "scale_factor": 1,  # GetThresholdedImageScaleFactor analogue
             "truncated": truncated,
         }

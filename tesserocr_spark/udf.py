@@ -24,11 +24,23 @@ A per-batch wall-clock budget mirrors Recognize's ETEXT_DESC deadline
 (tesserocr/tesserocr.pyx:2150-2161): documents starting after the budget is
 exhausted are skipped instead of stalling a corpus-scale job — a skipped
 document has NULL text, osd and metrics and empty span arrays.
+
+Each batch runs with CPython's cyclic garbage collector paused
+(``_gc_paused``). The reference builds its PAGE_RES span tree in C++, where
+no collector walks it; here a spans batch keeps GC-tracked span tuples alive
+until pandas→Arrow, and with the collector on CPython re-walked that growing
+heap again and again — including full (gen-2) collections — for about half
+the time of a 517-document spans batch. Pausing is safe because extraction
+allocates no reference cycles: refcounting frees all of it, so a paused
+batch leaks nothing. The law is locked by
+``tests/test_udf.py::test_extraction_makes_no_reference_cycles``.
 """
 
 from __future__ import annotations
 
+import gc
 import time
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -54,6 +66,19 @@ def _extractor_for(config: ExtractorConfig) -> Extractor:
         ex = Extractor(config)
         _EXTRACTORS_BY_KEY[key] = ex
     return ex
+
+
+@contextmanager
+def _gc_paused():
+    """Pause the cyclic collector for one UDF batch. Restores the state found
+    on entry, so nesting is safe and a caller that turned GC off keeps it off."""
+    was_enabled = gc.isenabled()
+    gc.disable()
+    try:
+        yield
+    finally:
+        if was_enabled:
+            gc.enable()
 
 
 def _per_doc_with_deadline(html: pd.Series, timeout_ms_per_doc: int, one, skipped) -> list:
@@ -102,8 +127,9 @@ def make_extract_columns_udf(
                 cols = _EMPTY_COLS
             return (d.text, *cols, d.osd, d.metrics)
 
-        rows = _per_doc_with_deadline(html, timeout_ms_per_doc, one, _SKIPPED_ROW)
-        return pd.DataFrame(rows, columns=_COL_NAMES)
+        with _gc_paused():
+            rows = _per_doc_with_deadline(html, timeout_ms_per_doc, one, _SKIPPED_ROW)
+            return pd.DataFrame(rows, columns=_COL_NAMES)
 
     return extract_cols
 
@@ -125,7 +151,8 @@ def make_extract_text_udf(
         else:
             def one(raw) -> str:
                 return ex.extract(raw, region=region).text
-        out = _per_doc_with_deadline(html, timeout_ms_per_doc, one, None)
-        return pd.Series(out, dtype="object")
+        with _gc_paused():
+            out = _per_doc_with_deadline(html, timeout_ms_per_doc, one, None)
+            return pd.Series(out, dtype="object")
 
     return extract_text

@@ -16,6 +16,7 @@ from tesserocr_spark.core.extractor import (
     FLAG_SUPERSCRIPT,
     word_conf,
 )
+from tesserocr_spark.pages import make_page
 
 #: canonical page — the eurotext analogue (FIXTURES.md §1); first words
 #: mirror the reference fixture: word0 "The" blanks 0, word1 "(quick)"
@@ -112,6 +113,31 @@ class TestInvariants:
         assert len(words) == len(confs)
         for w in words:
             assert w.conf == word_conf(w.text)
+
+    def test_metrics_count_the_spans(self):
+        """The metrics' level and boilerplate-block counts, tallied while
+        emitting, equal a recount of the emitted spans — for every PSM, with
+        and without a region, over pages with boilerplate and image blocks."""
+        pages = [CANONICAL_HTML, b"", None] + [make_page(i)[2] for i in range(40)]
+        seen_boiler = seen_image = 0
+        for psm in range(PSM.COUNT):
+            ex = Extractor(ExtractorConfig(psm=psm))
+            for html in pages:
+                for region in (None, (0, 0, 40, 3)):
+                    d = ex.extract(html, region=region)
+                    levels = [s[0] for s in d.raw_spans]
+                    boiler = sum(1 for s in d.raw_spans
+                                 if s[0] == RIL.BLOCK and s[11] & FLAG_BOILERPLATE)
+                    m = d.metrics
+                    assert (m["n_blocks"], m["n_paras"], m["n_lines"], m["n_words"],
+                            m["n_symbols"], m["n_boiler_blocks"]) == (
+                        levels.count(RIL.BLOCK), levels.count(RIL.PARA),
+                        levels.count(RIL.TEXTLINE), levels.count(RIL.WORD),
+                        levels.count(RIL.SYMBOL), boiler), (psm, region)
+                    seen_boiler += boiler
+                    seen_image += sum(1 for s in d.raw_spans
+                                      if s[0] == RIL.BLOCK and s[6] in PT.IMAGE_TYPES)
+        assert seen_boiler and seen_image
 
     def test_reading_order_strictly_increasing(self, canonical):
         keys = [

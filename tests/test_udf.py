@@ -1,8 +1,12 @@
 """The two extraction UDF factories, called in-process through ``.func``:
-their per-batch deadline contract and equality with the core."""
+their per-batch deadline contract, equality with the core, and the paused
+cyclic collector each batch runs under (with the acyclicity law that makes
+the pause safe)."""
 
 from __future__ import annotations
 
+import gc
+import itertools
 import threading
 import time
 
@@ -10,9 +14,14 @@ import pandas as pd
 import pytest
 
 from tesserocr_spark import udf
+from tesserocr_spark.config import ExtractorConfig
+from tesserocr_spark.constants import PSM
 from tesserocr_spark.core import Extractor
+from tesserocr_spark.core.segment import _Segmenter
+from tesserocr_spark.core.tokenizer import fast_feed
 from tesserocr_spark.pages import make_page
 from tesserocr_spark.schemas import EXTRACT_COLUMNS_SCHEMA, SPAN_COLUMNS, span_transport_name
+from tests.test_core import CANONICAL_HTML
 
 N_DOCS = 6
 N_RUN = 2  # documents that start before the fake clock jumps
@@ -73,3 +82,99 @@ def test_text_udf_deadline(htmls, clock_jumps, region):
     expected = [ex.extract(h, region=region).text for h in htmls[:N_RUN]]
     assert list(out) == expected + [None] * (N_DOCS - N_RUN)
 
+
+#: each factory with the Extractor method its batch calls per document
+FACTORIES = {
+    "columns": (udf.make_extract_columns_udf, "extract"),
+    "text": (udf.make_extract_text_udf, "extract_text"),
+}
+
+
+@pytest.fixture(params=sorted(FACTORIES))
+def factory(request):
+    return FACTORIES[request.param]
+
+
+def _patch_per_doc(monkeypatch, method: str, before) -> None:
+    """Run ``before(i)`` ahead of the i-th (0-based) per-document call."""
+    real = getattr(Extractor, method)
+    calls = itertools.count()
+
+    def wrapped(self, *args, **kwargs):
+        before(next(calls))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(Extractor, method, wrapped)
+
+
+@pytest.mark.parametrize("deadline", [False, True])
+def test_batch_pauses_and_restores_gc(htmls, factory, monkeypatch, request, deadline):
+    make, method = factory
+    seen = []
+    _patch_per_doc(monkeypatch, method, lambda i: seen.append(gc.isenabled()))
+    if deadline:
+        request.getfixturevalue("clock_jumps")
+    fn = make(timeout_ms_per_doc=5 if deadline else 0).func
+    assert gc.isenabled()
+    fn(htmls)
+    assert gc.isenabled()
+    assert seen == [False] * (N_RUN if deadline else N_DOCS)
+
+
+def test_batch_error_propagates_and_restores_gc(htmls, factory, monkeypatch):
+    make, method = factory
+
+    def second_raises(i):
+        if i == 1:
+            raise RuntimeError("boom on the 2nd document")
+
+    _patch_per_doc(monkeypatch, method, second_raises)
+    with pytest.raises(RuntimeError, match="2nd document"):
+        make().func(htmls)
+    assert gc.isenabled()
+
+
+def test_batch_keeps_gc_off_for_a_caller_that_disabled_it(htmls, factory):
+    make, _ = factory
+    gc.disable()
+    try:
+        make().func(htmls)
+        assert not gc.isenabled()
+    finally:
+        gc.enable()
+
+
+#: falls off the fast tokenizer (``<![`` section) onto the stdlib parser
+FALLBACK_HTML = b"<p>before the section</p><![CDATA[a>b]]><p>after it</p>"
+
+
+def test_extraction_makes_no_reference_cycles(spark):  # spark: the text UDF's type
+    """The law that makes the paused collector safe: everything extraction
+    allocates is freed by refcounting, so with GC off nothing is left for a
+    collection to find."""
+    assert not fast_feed(FALLBACK_HTML.decode(), _Segmenter())
+    specials = [CANONICAL_HTML, FALLBACK_HTML, None, b""]
+    pages = [make_page(i)[2] for i in range(200)] + specials
+    # every PSM, an oversized page (max_html_bytes 64) and char filters,
+    # each over the special pages and a slice of the corpus
+    configs = [ExtractorConfig(psm=p) for p in range(PSM.COUNT)] + [
+        ExtractorConfig(variables={"max_html_bytes": "64"}),
+        ExtractorConfig(variables={"tessedit_char_blacklist": "()e", "min_text_chars": "3"}),
+    ]
+    runs = [(Extractor(), pages)] + [(Extractor(c), pages[:20] + specials) for c in configs]
+    batch = pd.Series(pages[:16] + specials)
+    columns_fn = udf.make_extract_columns_udf().func
+    text_fn = udf.make_extract_text_udf(region=(0, 0, 40, 3)).func
+    gc.collect()
+    gc.disable()
+    try:
+        for ex, docs in runs:
+            for html in docs:
+                ex.extract(html)
+                ex.extract(html, region=(0, 0, 40, 3))
+                ex.extract_text(html)
+        columns_fn(batch)
+        text_fn(batch)
+        assert gc.collect() == 0
+    finally:
+        gc.enable()
